@@ -3,15 +3,15 @@
     spark.read.parquet(pages)                      # Iceberg in production
       .select("url", "html")                       # column-pruned scan
       .withColumn("bucket", pmod(xxhash64(url, SALT), P))
-      .repartition(P, "bucket")       # OPT-IN (resume lineage only —
-      .mapInPandas(extraction_kernel, RESULT_SCHEMA)   # default is
-                                      # shuffle-free scan → kernel)
+      .mapInPandas(extraction_kernel, RESULT_SCHEMA)   # on the scan splits
+      .repartitionById(P, "bucket")   # OPT-IN (resume lineage only):
+                                      # partition k holds exactly bucket k
 
 One Arrow batch in → one result row per document out; per-document
 failures become failure *rows*, never task failures (app.py:180-186
 analogue).  The metrics side table is a Catalyst-native aggregation over
 the result set, one row per bucket (north_rule: per-partition lineage +
-success/failure metrics); resume anti-joins completed buckets.
+success/failure metrics); resume skips completed buckets.
 
 Scale notes (100 TB / 10^12 docs):
   * bucket count P is the unit of resume + skew spread; hash(url) with a
@@ -19,10 +19,11 @@ Scale notes (100 TB / 10^12 docs):
     salt is a pure function of url — restart-stable);
   * the kernel is CPU-bound Python: throughput scales with executor
     cores as long as Arrow batches amortize IPC (maxRecordsPerBatch is
-    bounded in session.py because html payloads are KB-sized);
-  * no driver-side collection anywhere; the only shuffle is the single
-    repartition by bucket (needed for deterministic resume lineage —
-    without resume, mapInPandas runs shuffle-free on scan partitions).
+    bounded in session.py because html payloads are KB-sized), so the
+    kernel always runs on the scan splits, never on bucket partitions;
+  * no driver-side collection anywhere; the only shuffle is the opt-in
+    exact placement of *results* by bucket (resume lineage: one bucket
+    per write task) — without resume the plan is shuffle-free.
 """
 
 from __future__ import annotations
@@ -202,26 +203,25 @@ def run_extract(
     num_buckets: int = 64,
     repartition: bool = False,
 ) -> DataFrame:
-    """The extraction plan: prune columns → bucket → (optional shuffle) →
-    vectorized kernel.  Returns the results DataFrame (lazy).
+    """The extraction plan: prune columns → bucket → vectorized kernel on
+    the scan splits → (optional) exact bucket placement.  Returns the
+    results DataFrame (lazy).
 
-    Round-6 default flip (guide §2.4 "remove shuffles outright"):
-    ``repartition=False`` — the kernel runs straight on the scan splits,
-    so the html payload is never shuffled at all.  The bucket column is
-    still computed (deterministic url-hash lineage for consumers that
-    group by it); only the physical exchange is gone.  The shuffle is
-    needed ONLY when bucket-aligned task lineage matters (resume:
-    ``run_resumable`` repartitions explicitly).  Skew: scan splits are
+    The kernel always runs straight on the scan splits, whose size is
     bounded by ``spark.sql.files.maxPartitionBytes`` (8 MB in
-    session.py), so a corpus yields ≥ tens of splits per GB and the
-    pdf/html cost mix balances by LLN within each multi-thousand-doc
-    split.  Measured best-of-4 at 200k docs / local[32]: 14.6s vs 16.1s
-    with the shuffle — identical results (raw_json_bytes invariant)."""
+    session.py), so kernel parallelism follows the input, not the bucket
+    count.  The bucket column is always computed (deterministic url-hash
+    lineage for consumers that group by it).  ``repartition=True`` adds
+    one shuffle of the kernel's *results* with ``repartitionById``, so
+    partition k holds exactly bucket k: ``run_resumable`` then writes one
+    bucket per task.  A hash ``repartition(P, "bucket")`` would not do:
+    hashing P small ints into P partitions collides (at P = 8, three
+    buckets share one partition and three partitions stay empty)."""
     pruned = pages.select("url", "html")
-    bucketed = with_bucket(pruned, num_buckets)
+    results = with_bucket(pruned, num_buckets).mapInPandas(extraction_kernel, RESULT_SCHEMA)
     if repartition:
-        bucketed = bucketed.repartition(num_buckets, "bucket")
-    return bucketed.mapInPandas(extraction_kernel, RESULT_SCHEMA)
+        results = results.repartitionById(num_buckets, "bucket")
+    return results
 
 
 def metrics_rollup(results: DataFrame, run_id: str) -> DataFrame:
@@ -257,11 +257,14 @@ def run_resumable(
 ) -> None:
     """Idempotent bucket-at-a-time job (SURVEY.md §4 "Resumability").
 
-    Completed buckets are recorded in the metrics table; on restart the
-    pending set = all buckets ANTI JOIN completed buckets (broadcast —
-    the bucket list is tiny).  Result files are written under
-    ``bucket=<k>/`` partitions, so a re-run of a half-finished bucket
-    overwrites only that bucket's directory (dynamic partition overwrite).
+    Completed buckets are recorded in the metrics table; on restart their
+    documents are filtered out before the kernel, so only pending buckets
+    are extracted.  Results come from ``run_extract(..., repartition=True)``
+    and are written under ``bucket=<k>/`` partitions, one task and one
+    file per bucket, so a re-run of a half-finished bucket overwrites only
+    that bucket's directory (dynamic partition overwrite).  The metrics
+    rollup reads back only the buckets this run wrote, so no bucket gets
+    a second metrics row on resume.
     """
     completed: set[int] = set()
     try:
@@ -270,18 +273,19 @@ def run_resumable(
     except Exception:
         pass  # no metrics yet — fresh run
 
-    bucketed = with_bucket(pages.select("url", "html"), num_buckets)
+    pending_buckets = [b for b in range(num_buckets) if b not in completed]
+    if not pending_buckets:
+        return
+    pending = pages
     if completed:
-        bucketed = bucketed.where(~F.col("bucket").isin(sorted(completed)))
+        pending = with_bucket(pages, num_buckets).where(~F.col("bucket").isin(sorted(completed)))
 
-    results = bucketed.repartition(num_buckets, "bucket").mapInPandas(
-        extraction_kernel, RESULT_SCHEMA
-    )
+    results = run_extract(pending, num_buckets, repartition=True)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     results.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
 
-    done = spark.read.parquet(output_path)
+    done = spark.read.parquet(output_path).where(F.col("bucket").isin(pending_buckets))
     metrics_rollup(done, run_id).write.mode("append").parquet(metrics_path)
 
 
@@ -346,8 +350,8 @@ def run_resumable_by_file(
     travel as a small manifest DataFrame (at 10^7 files: read the
     Iceberg ``files`` table instead of ``createDataFrame``), never as
     ``create_map`` literals, so plan size is independent of file count.
-    This is the preferred production shape; the bucket-shuffle variant
-    (run_resumable) remains for url-hash-keyed lineage.
+    This is the preferred production shape; ``run_resumable`` remains
+    for url-hash-keyed lineage.
 
     Idempotence: results are written under ``bucket=<file_id>/``
     partitions (dynamic overwrite), so re-running a half-finished file

@@ -13,7 +13,7 @@ Usage::
 On a real cluster the same script runs unchanged; only ``--master`` and
 executor sizing move to the spark-submit line.  Resume: re-running with
 the same ``--run-id`` skips buckets already recorded in the metrics
-table (per-partition lineage anti-join, plans/extract_job.py).
+table (plans/extract_job.py).
 """
 
 from __future__ import annotations

@@ -145,6 +145,11 @@ def test_resume(spark, tmp_path):
     assert resumed.count() == 60
     assert resumed.select("url").distinct().count() == 60
 
+    # one metrics row per bucket: the resume rolls up only the buckets it wrote
+    m = spark.read.parquet(metrics).where(F.col("run_id") == "run-A").collect()
+    assert sorted(r["bucket"] for r in m) == [0, 1, 2, 3]
+    assert sum(r["n_docs"] for r in m) == 60
+
     # uninterrupted reference run
     full = run_extract(pages, num_buckets=4)
     a = sorted((r["url"], r["raw_json"]) for r in resumed.select("url", "raw_json").collect())

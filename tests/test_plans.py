@@ -42,8 +42,9 @@ def test_extraction_scan_is_column_pruned(spark, sf_dir):
 
 def test_extraction_has_single_exchange(spark, sf_dir):
     """DEFAULT is shuffle-free (round 6: the html payload is never
-    shuffled — guide §2.4); the opt-in bucket repartition (resume
-    lineage) is exactly one exchange."""
+    shuffled — guide §2.4); the opt-in bucket placement (resume lineage)
+    is exactly one exchange, and it sits above the kernel: it moves
+    results, so the kernel runs on the scan splits."""
     from pdf_extractor2_spark.plans.extract_job import run_extract
 
     pages = spark.read.parquet(sf_dir)
@@ -53,6 +54,25 @@ def test_extraction_has_single_exchange(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange", plan_free)) == 0, plan_free
     plan = _plan(run_extract(pages, num_buckets=4, repartition=True))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
+    tree = plan.split("\n\n")[0]  # top-down operator tree
+    assert tree.index("Exchange") < tree.index("MapInPandas"), tree
+
+
+def test_repartition_places_each_bucket_in_its_own_partition(spark, sf_dir):
+    """``repartition=True`` puts bucket k in partition k, so the resumable
+    write runs one bucket per task (a hash repartition on the bucket
+    column collides: at 8 buckets, three share one partition)."""
+    from pyspark.sql import functions as F
+
+    from pdf_extractor2_spark.plans.extract_job import run_extract
+
+    pages = spark.read.parquet(sf_dir)
+    placed = run_extract(pages, num_buckets=8, repartition=True).select(
+        "bucket", F.spark_partition_id().alias("pid")
+    )
+    pairs = {(r["bucket"], r["pid"]) for r in placed.collect()}
+    assert {b for b, _ in pairs} == set(range(8)), pairs  # every bucket present
+    assert all(b == pid for b, pid in pairs), sorted(pairs)
 
 
 def test_dimension_joins_are_broadcast(spark):
